@@ -53,9 +53,17 @@ class SchemaAgnosticBlocker(Blocker):
         left_rel: DataFrame | None = None,
         right_rel: DataFrame | None = None,
     ) -> BlockManager:
-        bm = self._assign(
+        return self._assign_purged(
             left.concat_values(), right.concat_values(), left.name, right.name
         )
+
+    def _assign_purged(
+        self, left: DataFrame, right: DataFrame, left_name: str, right_name: str
+    ) -> BlockManager:
+        """:meth:`_assign`, then the purge if configured — the entry for
+        every caller that already holds ``(id, text)`` frames (the
+        relational blockers' neighbor-text side included)."""
+        bm = self._assign(left, right, left_name, right_name)
         if getattr(self, "_purge", False):
             bm = bm.purge(cc_round=self._cc_round)
         return bm

@@ -239,7 +239,7 @@ class SimpleRelationalBlocker(_ConcatRelationalInfo, Blocker):
         right_rel: DataFrame | None = None,
     ) -> BlockManager:
         assert left_rel is not None and right_rel is not None
-        return self._blocker._assign(
+        return self._blocker._assign_purged(
             self._conc(left, left_rel, True),
             self._conc(right, right_rel, True),
             left.name,
@@ -287,7 +287,7 @@ class RelationalBlocker(_ConcatRelationalInfo, Blocker):
     ) -> BlockManager:
         assert left_rel is not None and right_rel is not None
         attr_blocks = self._attribute_blocker.assign(left, right)
-        rel_blocks = self._relation_blocker._assign(
+        rel_blocks = self._relation_blocker._assign_purged(
             self._conc(left, left_rel, False),
             self._conc(right, right_rel, False),
             left.name,

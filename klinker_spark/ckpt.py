@@ -1,36 +1,48 @@
-"""``localCheckpoint`` lifecycle management.
+"""Checkpoints, layout caches and their release — the one place.
 
 The iterative operators (PageRank, HITS, BFS, k-core, label
-propagation, FPS coreset, Boruvka MST, connected components) truncate
-lineage per round with ``localCheckpoint(eager=True)``.  The blocks
-behind a local checkpoint live in the executor BlockManager and are
-freed only when the JVM ``ContextCleaner`` observes the RDD
-unreachable — which, from PySpark, requires the py4j reference to be
-collected on the Python side first.  In a long session (the 140-query
-bench, the driver's correctness gate) that is far too lazy: orphaned
-blocks from completed queries accumulate until memory pressure
-evict-churns later queries (measured: pagerank sf1 24 s fresh vs
-~50 s behind a session's worth of orphan blocks — the round-7
-headline regression).
+propagation, FPS coreset, Boruvka MST, connected components) and the
+dedup-family operators materialize intermediate state.  Every
+checkpoint and every join-key layout cache is made here, and freed
+through :func:`release`:
 
-Two eager levers, both no-ops on errors (lifecycle hygiene must never
-fail a query):
+- :func:`checkpoint` — eager ``localCheckpoint``: lineage truncated,
+  blocks in the executor BlockManager.  The ONLY caller of
+  ``localCheckpoint`` in the package.  Loops rotate their per-round
+  state with ``state = checkpoint(step, replacing=state)``: the
+  superseded round is freed once the new one is materialized, so at
+  most two versions ever hold storage.
+- :func:`hash_partitioned` / :func:`layout_cache` — hash-repartition on
+  the join key at the session's shuffle-partition count (the ONLY
+  reader of ``spark.sql.shuffle.partitions`` in the package), and
+  persist that layout.  A checkpoint erases ``outputPartitioning`` in
+  Spark 4 (the plan is rebuilt over a bare LogicalRDD); a cached
+  InMemoryRelation keeps it, so a loop-invariant table joined every
+  round on one key is cached in that key's layout instead.
+- :func:`release` — free whatever backs each frame: ``unpersist()``
+  for a cached frame, the LogicalRDD blocks for a checkpoint.
+- :func:`track` / :func:`release_owned` / :func:`release_all` — caches
+  whose lifetime outlives the creating call.
 
-- :func:`release` — free ONE checkpointed DataFrame's blocks the
-  moment an iteration supersedes it.  Loop bodies call
-  ``new = checkpoint(plan, replacing=old)`` so at most two versions
-  of the per-round state ever hold storage.
-- :func:`release_all` — drop every persistent RDD in the context;
-  harness-level (between bench queries / gate rows), where by
-  construction nothing from the previous query may be referenced
-  again.
+Who frees what: an operator releases every intermediate it created
+before returning.  A checkpoint or cache the operator RETURNS (or that
+its returned plan reads) belongs to the caller — free it with
+``release(result)`` once consumed, or let the next harness-level
+:func:`release_all` drop it.  Left alone, its blocks go only when the
+JVM ``ContextCleaner`` sees the RDD unreachable, which from PySpark
+requires the py4j reference to be collected first.  In a long session
+(the 140-query bench, the driver's correctness gate) that is far too
+lazy: orphaned blocks accumulate until memory pressure evict-churns
+later queries (measured: pagerank sf1 24 s fresh vs ~50 s behind a
+session's worth of orphan blocks — the round-7 headline regression).
 
-Safety: a locally-checkpointed RDD whose blocks are dropped cannot be
-recomputed (lineage is truncated — that is the point of the
-operation), so ``release`` is only correct when the caller guarantees
-the frame is dead.  Inside the iterative loops that holds by
-construction: round *t*'s state is consumed exactly once, to build
-the (eagerly materialized) round *t+1* checkpoint.
+Safety: a checkpoint whose blocks are dropped cannot be recomputed
+(lineage is truncated — that is the point), so :func:`release` is only
+correct when the caller guarantees the frame is dead.  Inside the
+loops that holds by construction: round *t*'s state is consumed
+exactly once, to build the (eagerly materialized) round *t+1*
+checkpoint.  Lifecycle hygiene never fails a query: every release
+swallows JVM errors.
 """
 
 from __future__ import annotations
@@ -39,7 +51,15 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["checkpoint", "release", "release_all", "release_owned", "track"]
+__all__ = [
+    "checkpoint",
+    "hash_partitioned",
+    "layout_cache",
+    "release",
+    "release_all",
+    "release_owned",
+    "track",
+]
 
 #: persist()-ed frames registered by library code whose cache must
 #: outlive the registering call (e.g. combine_all's stacked frame,
@@ -83,10 +103,7 @@ def release_owned(owner: object) -> None:
     drop it from the harness registry.  Safe once the owner is dead
     (its terminal action consumed); idempotent."""
     for df in _OWNED.pop(id(owner), []) or []:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        release(df)
         try:
             _TRACKED.remove(df)
         except ValueError:
@@ -95,39 +112,59 @@ def release_owned(owner: object) -> None:
 
 def checkpoint(df: DataFrame, replacing: DataFrame | None = None) -> DataFrame:
     """Eager ``localCheckpoint``; optionally free the superseded round's
-    blocks once the new ones are materialized."""
+    storage (:func:`release`) once the new blocks are materialized."""
     out = df.localCheckpoint(eager=True)
-    if replacing is not None:
-        release(replacing)
+    release(replacing)
     return out
 
 
-def release(df: DataFrame | None) -> None:
-    """Free the BlockManager storage behind a ``localCheckpoint``-ed
-    DataFrame immediately (instead of waiting for py4j + ContextCleaner
-    garbage collection).  No-op for non-checkpointed frames and on any
-    JVM error."""
-    if df is None:
-        return
+def hash_partitioned(df: DataFrame, *keys: str) -> DataFrame:
+    """``df`` hash-repartitioned on ``keys`` at the session's shuffle
+    partition count.  An explicit count, not ``repartition(*keys)``:
+    AQE never coalesces a fixed-count repartition, so the layout a
+    cache captures is the one every later join on the key expects."""
+    spark = df.sparkSession
     try:
-        # the plan of a checkpointed Dataset is a LogicalRDD; its rdd()
-        # accessor is the materialized RDD[InternalRow] holding the blocks
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:
-        pass
+        part = spark.sparkContext.defaultParallelism
+    return df.repartition(part, *keys)
+
+
+def layout_cache(df: DataFrame, *keys: str) -> DataFrame:
+    """Lazily persisted :func:`hash_partitioned` copy of ``df`` — the
+    loop-invariant side of a per-round join on ``keys``, joined
+    exchange-free from the cache.  Free with :func:`release`."""
+    return hash_partitioned(df, *keys).persist()
+
+
+def release(*dfs: DataFrame | None) -> None:
+    """Free the storage behind each frame now, instead of waiting for
+    py4j + ContextCleaner garbage collection: ``unpersist()`` for a
+    cached frame, the BlockManager blocks for a checkpoint.  ``None``
+    and frames backed by neither are no-ops, as is any JVM error."""
+    for df in dfs:
+        if df is None:
+            continue
+        try:
+            if df.is_cached:
+                df.unpersist()
+            else:
+                # the plan of a checkpointed Dataset is a LogicalRDD; its
+                # rdd() accessor is the materialized RDD[InternalRow]
+                # holding the blocks
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        except Exception:
+            pass
 
 
 def release_all(spark: SparkSession) -> None:
-    """Unpersist EVERY persistent RDD in the context — localCheckpoint
+    """Unpersist EVERY persistent RDD in the context — checkpoint
     blocks and leaked ``persist()``s alike.  Only safe between
     independent units of work (bench queries, gate rows): afterwards,
     any still-held checkpointed frame is unusable."""
     while _TRACKED:
-        df = _TRACKED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        release(_TRACKED.pop())
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for jrdd in list(jmap.values()):

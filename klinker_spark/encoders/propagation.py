@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import layout_cache
 from ..data.frames import reverse_rel
 from .hashing import HashingWordEmbedder, initialize_and_fill
 
@@ -103,12 +104,7 @@ def propagate(
     # hash layout exchange-free (a bare persist kept whatever upstream
     # layout existed and re-shuffled |E| per hop).
     if depth > 1:
-        spark = edges.sparkSession
-        try:
-            part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            part = spark.sparkContext.defaultParallelism
-        edges = edges.repartition(part, "tail").persist()
+        edges = layout_cache(edges, "tail")
     # dim comes from the caller (encoders know it) — probing it with a
     # .first() action would re-execute the whole upstream encoder
     # pipeline once per encode (measured +20 s cold on the sf0.1 gcn
@@ -361,14 +357,9 @@ class LightEAEncoder(GCNFrameEncoder):
             # r12: each loop-invariant table caches pre-partitioned on
             # ITS per-hop join key — exchange-free hop joins (see
             # propagate())
-            spark = rels.sparkSession
-            try:
-                part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                part = spark.sparkContext.defaultParallelism
-            ee = ee.repartition(part, "dst").persist()
-            rel_ent = rel_ent.repartition(part, "id").persist()
-            ent_rel = ent_rel.repartition(part, "r").persist()
+            ee = layout_cache(ee, "dst")
+            rel_ent = layout_cache(rel_ent, "id")
+            ent_rel = layout_cache(ent_rel, "r")
 
         def l2(df: DataFrame, key: str) -> DataFrame:
             n = df.groupBy(key).agg(

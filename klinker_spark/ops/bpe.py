@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import checkpoint
 from ..functions.text import tokenize
 
 #: symbol separator inside the padded symbol string (two spaces).
@@ -152,7 +153,7 @@ def bpe_train(
     # so no corpus-derived cache block outlives training.  (Calling
     # .unpersist() on the returned derived frame is a no-op — the cache
     # lives on the pre-loop base.)
-    rep = rep.localCheckpoint(eager=True)
+    rep = checkpoint(rep)
     rep_base.unpersist()
     return merges, rep
 

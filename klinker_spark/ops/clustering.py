@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from ..ckpt import checkpoint, release
 from ..functions.vectors import cosine
 
 __all__ = ["dbscan_labels", "hdbscan_labels", "mutual_reachability_edges", "boruvka_mst"]
@@ -102,7 +102,7 @@ def dbscan_labels(
     )
     # materialize before dropping the cached ε-graph — the result is
     # |V| scalar rows, while a lazy return would re-run the ε-join
-    out = (
+    out = checkpoint(
         labels.unionByName(border)
         .unionByName(
             pts.select("id")
@@ -110,10 +110,8 @@ def dbscan_labels(
             .join(border.select("id"), "id", "left_anti")
             .select("id", F.lit("-1").alias("label"))
         )
-        .localCheckpoint(eager=True)
     )
-    for cached in (edges, core, core_edges):
-        cached.unpersist()
+    release(edges, core, core_edges)
     return out
 
 
@@ -201,11 +199,10 @@ def mutual_reachability_edges(
             F.least("id", "nid").alias("a"), F.greatest("id", "nid").alias("b"), "d"
         ).distinct()
     )
-    out = (
+    out = checkpoint(
         canon.join(cores.select(F.col("id").alias("a"), F.col("core").alias("core_a")), "a")
         .join(cores.select(F.col("id").alias("b"), F.col("core").alias("core_b")), "b")
         .select("a", "b", F.greatest("d", "core_a", "core_b").alias("w"))
-        .localCheckpoint(eager=True)
     )
     pairs.unpersist()
     return out
@@ -238,91 +235,67 @@ def boruvka_mst(
     (n - #components rows).
     """
     from ..session import local_df
-    from .curation import connected_components
+    from .curation import _min_label_union_find, connected_components
 
-    comp = vertices.select(
-        F.col(vertices.columns[0]).alias("id")
-    ).withColumn("comp", F.col("id")).localCheckpoint(eager=True)
-    ed = edges.localCheckpoint(eager=True)
+    comp = checkpoint(
+        vertices.select(F.col(vertices.columns[0]).alias("id")).withColumn("comp", F.col("id"))
+    )
+    ed = checkpoint(edges)
     spark = edges.sparkSession
     mst = None
     for _ in range(max_iter):
         lab_a = comp.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         lab_b = comp.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-        cross = (
+        cross = checkpoint(
             ed.join(lab_a, "a").join(lab_b, "b").where(F.col("ca") != F.col("cb"))
-        ).localCheckpoint(eager=True)
+        )
         if cross.isEmpty():
-            _free(cross)
+            release(cross)
             break
         wnd = Window.partitionBy("comp").orderBy(
             F.col("w").asc(), F.col("a").asc(), F.col("b").asc()
         )
-        sel = (
+        sel = checkpoint(
             cross.select(F.col("ca").alias("comp"), "a", "b", "w", "ca", "cb")
             .unionByName(cross.select(F.col("cb").alias("comp"), "a", "b", "w", "ca", "cb"))
             .withColumn("rn", F.row_number().over(wnd))
             .where(F.col("rn") == 1)
             .select("a", "b", "w", "ca", "cb")
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        prev_mst = mst
         # first round checkpoints too: the forest must be self-contained
         # so each round's sel blocks can free at round end
-        mst = (
-            sel.select("a", "b", "w").localCheckpoint(eager=True)
-            if mst is None
-            else mst.unionByName(sel.select("a", "b", "w")).localCheckpoint(eager=True)
+        forest = sel.select("a", "b", "w")
+        mst = checkpoint(
+            forest if mst is None else mst.unionByName(forest), replacing=mst
         )
-        _free(prev_mst)
-        n_sel = sel.count()
-        if n_sel <= BORUVKA_DRIVER_CONTRACT_MAX:
+        if sel.count() <= BORUVKA_DRIVER_CONTRACT_MAX:
             # driver union-find over the selected component pairs
-            parent: dict = {}
-
-            def find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            pairs_local = sel.select("ca", "cb").collect()
-            for r in pairs_local:
-                ra, rb = find(r["ca"]), find(r["cb"])
-                if ra != rb:  # deterministic label: smaller root wins
-                    lo, hi = (ra, rb) if ra <= rb else (rb, ra)
-                    parent[hi] = lo
-            mapping = [(c, find(c)) for c in list(parent)]
+            mapping = _min_label_union_find(sel.select("ca", "cb").collect())
             ctype = comp.schema["comp"].dataType.simpleString()
-            relabel = local_df(spark, mapping, f"comp {ctype}, label {ctype}")
-            prev_comp = comp
-            comp = (
+            relabel = local_df(spark, list(mapping.items()), f"comp {ctype}, label {ctype}")
+            comp = checkpoint(
                 comp.join(F.broadcast(relabel), "comp", "left")
-                .select("id", F.coalesce("label", "comp").alias("comp"))
-                .localCheckpoint(eager=True)
+                .select("id", F.coalesce("label", "comp").alias("comp")),
+                replacing=comp,
             )
         else:
             contract = sel.select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
             relabel_df = connected_components(
                 contract, "src", "dst", vertices=comp.select("comp").distinct()
             )
-            prev_comp = comp
-            comp = (
+            comp = checkpoint(
                 comp.join(relabel_df.withColumnRenamed("id", "comp"), "comp")
-                .select("id", F.col("label").alias("comp"))
-                .localCheckpoint(eager=True)
+                .select("id", F.col("label").alias("comp")),
+                replacing=comp,
             )
-            _free(relabel_df)
-        # round teardown: the contracted labels supersede prev_comp; the
-        # selected-edge and crossing tables are folded into mst/comp
-        _free(prev_comp)
-        _free(sel)
-        _free(cross)
+            release(relabel_df)
+        # round teardown: the selected-edge and crossing tables are
+        # folded into mst/comp
+        release(sel, cross)
     else:
         raise RuntimeError(f"boruvka_mst did not converge in {max_iter} rounds")
-    _free(comp)
-    _free(ed)
+    release(comp, ed)
     if mst is None:
         return spark.createDataFrame([], "a string, b string, w double")
     return mst

@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from ..ckpt import checkpoint, layout_cache, release
 from ..functions.text import tokenize, word_shingles
 
 __all__ = [
@@ -258,7 +258,7 @@ def connected_components(
         # per consumer (measured 2x the whole query at sf0.1).  With an
         # explicit vertices= the edge frame is consumed once and the
         # caller (e.g. DBSCAN) typically persists it already — no copy.
-        pairs = pairs.localCheckpoint(eager=True)
+        pairs = checkpoint(pairs)
         # vertex set BEFORE dropping self-loops: a vertex whose only
         # edge is (v, v) is still incident to an edge
         ids = pairs.select("id").unionByName(pairs.select(F.col("nid").alias("id"))).distinct()
@@ -281,27 +281,18 @@ def connected_components(
     # whatever upstream layout existed and the label join re-shuffles
     # |E| every round under SortMergeJoin; the cached hash layout
     # joins exchange-free)
-    spark = edges.sparkSession
-    try:
-        part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        part = spark.sparkContext.defaultParallelism
-    und = (
+    und = layout_cache(
         pairs.unionByName(pairs.select(F.col("nid").alias("id"), F.col("id").alias("nid")))
         .where(F.col("id") != F.col("nid"))
-        .distinct()
-        .repartition(part, "nid")
-        .persist()
+        .distinct(),
+        "nid",
     )
     labels = ids.withColumn("label", F.col("id"))
     converged = False
     for _ in range(max_iter):
         neigh = und.join(labels.withColumnRenamed("id", "nid"), "nid").select("id", "label")
-        new_labels = (
-            labels.unionByName(neigh)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
+        new_labels = checkpoint(
+            labels.unionByName(neigh).groupBy("id").agg(F.min("label").alias("label"))
         )
         changed = (
             new_labels.alias("n")
@@ -309,13 +300,12 @@ def connected_components(
             .where(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        _free(labels)
+        release(labels)
         labels = new_labels
         if changed == 0:
             converged = True
             break
-    und.unpersist()
-    _free(pairs)
+    release(und, pairs)
     if not converged:
         raise RuntimeError(
             f"connected_components: min-label propagation did not converge "
@@ -325,12 +315,13 @@ def connected_components(
     return labels
 
 
-def _local_components(rows, ids: DataFrame) -> DataFrame:
-    """Driver-side union-find over a collected ``(id, nid)`` edge list
-    (the sub-``local_threshold`` fast path).  Union-by-min keeps each
-    tree's root at the smallest member id, so ``find`` yields exactly
-    the distributed algorithms' label; vertices with no edge keep
-    their own id via the outer join against ``ids``.
+def _min_label_union_find(pairs) -> dict:
+    """Driver-side union-find over collected ``(a, b)`` pairs →
+    ``{node: label}`` for every node seen, in first-seen order.
+    Union-by-min keeps each tree's root at the smallest member id, so
+    the label is exactly the distributed algorithms' minimum-id label
+    (shared by :func:`_local_components` and Borůvka's driver
+    contraction, ``ops/clustering.py``).
 
     Parity details (r10 ADVICE): null endpoints are skipped — the
     distributed paths' joins never see them either; string ids compare
@@ -350,14 +341,22 @@ def _local_components(rows, ids: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        if r[0] is None or r[1] is None:
+    for a, b in pairs:
+        if a is None or b is None:
             continue
-        a, b = find(r[0]), find(r[1])
+        a, b = find(a), find(b)
         if a != b:
             if _min_key(b) < _min_key(a):
                 a, b = b, a
             parent[b] = a
+    return {x: find(x) for x in list(parent)}
+
+
+def _local_components(rows, ids: DataFrame) -> DataFrame:
+    """The sub-``local_threshold`` fast path: :func:`_min_label_union_find`
+    over the collected ``(id, nid)`` edge list; vertices with no edge
+    keep their own id via the outer join against ``ids``."""
+    labels = _min_label_union_find(rows)
     spark = ids.sparkSession
     id_type = ids.schema[0].dataType
     from pyspark.sql.types import StructField, StructType
@@ -365,9 +364,7 @@ def _local_components(rows, ids: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("id", id_type), StructField("label", id_type)]
     )
-    lab = spark.createDataFrame(
-        [(x, find(x)) for x in parent], schema
-    )
+    lab = spark.createDataFrame(list(labels.items()), schema)
     return ids.join(F.broadcast(lab), "id", "left").select(
         "id", F.coalesce("label", F.col("id")).alias("label")
     )
@@ -385,11 +382,10 @@ def _star_components(pairs: DataFrame, ids: DataFrame, max_iter: int) -> DataFra
     minimum vertex, reached in O(log n) rounds.  Edges are kept
     canonical ``(hi, lo)`` so set-equality is the convergence test.
     """
-    e = (
+    e = checkpoint(
         pairs.where(F.col("id") != F.col("nid"))
         .select(F.greatest("id", "nid").alias("hi"), F.least("id", "nid").alias("lo"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     converged = False
     for _ in range(max_iter):
@@ -416,14 +412,13 @@ def _star_components(pairs: DataFrame, ids: DataFrame, max_iter: int) -> DataFra
             .select(F.col("lo").alias("a"), F.col("m").alias("b"))
             .unionByName(m2.select(F.col("hi").alias("a"), F.col("m").alias("b")))
         )
-        new_e = (
+        new_e = checkpoint(
             emit.where(F.col("a") != F.col("b"))
             .select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         same = new_e.count() == e.count() and new_e.subtract(e).count() == 0
-        _free(e)
+        release(e)
         e = new_e
         if same:
             converged = True
@@ -770,7 +765,7 @@ def unigram_logprob_quality(
         .cast("bigint")
         .alias("lp_micro"),
     )
-    out = (
+    out = checkpoint(
         toks.join(F.broadcast(lp), "token")
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_tokens"), F.sum("lp_micro").alias("s"))
@@ -779,7 +774,6 @@ def unigram_logprob_quality(
             "n_tokens",
             F.round(F.col("s") / (F.lit(1e6) * F.col("n_tokens")), 6).alias("avg_logprob"),
         )
-        .localCheckpoint(eager=True)
     )
     toks.unpersist()
     return out
@@ -844,7 +838,7 @@ def dsir_importance(
         .cast("bigint")
         .alias("w_micro"),
     )
-    out = (
+    out = checkpoint(
         toks.where(~F.col("is_target"))
         .join(F.broadcast(w), "token")
         .groupBy("doc_id")
@@ -854,7 +848,6 @@ def dsir_importance(
             "n_tokens",
             F.round(F.col("s") / F.lit(1e6), 6).alias("log_ratio"),
         )
-        .localCheckpoint(eager=True)
     )
     toks.unpersist()
     return out
@@ -937,7 +930,7 @@ def vocab_coverage(
         .limit(vocab_size)
         .select("token", F.lit(1).alias("in_vocab"))
     )
-    out = (
+    out = checkpoint(
         toks.join(F.broadcast(vocab), "token", "left")
         .groupBy("doc_id")
         .agg(
@@ -950,7 +943,6 @@ def vocab_coverage(
             "n_oov",
             F.round(F.col("n_oov") / F.col("n_tokens"), 6).alias("oov_rate"),
         )
-        .localCheckpoint(eager=True)
     )
     toks.unpersist()
     return out
@@ -1053,7 +1045,7 @@ def duplicated_span_stats(
         .persist()
     )
     span_df = spans.groupBy("span").agg(F.count("*").alias("df"))
-    out = (
+    out = checkpoint(
         spans.join(span_df, "span")
         .groupBy("doc_id")
         .agg(
@@ -1066,7 +1058,6 @@ def duplicated_span_stats(
             "n_dup_spans",
             F.round(F.col("n_dup_spans") / F.col("n_spans"), 6).alias("dup_span_frac"),
         )
-        .localCheckpoint(eager=True)
     )
     spans.unpersist()
     return out
@@ -1530,7 +1521,7 @@ def bigram_logprob_quality(
             F.round(lp * 1e6).cast("bigint").alias("lp_micro"),
         )
     )
-    out = (
+    out = checkpoint(
         scored.groupBy("doc_id")
         .agg(
             F.first("n_tokens").alias("n_tokens"),
@@ -1541,7 +1532,6 @@ def bigram_logprob_quality(
             "n_tokens",
             F.round(F.col("s") / (F.lit(1e6) * F.col("n_tokens")), 6).alias("avg_logprob"),
         )
-        .localCheckpoint(eager=True)
     )
     occ.unpersist()
     return out

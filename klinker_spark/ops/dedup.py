@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 logger = logging.getLogger(__name__)
 
-from ..ckpt import release as _free
+from ..ckpt import checkpoint, release
 from ..functions.text import minhash_signatures, simhash, tokenize, word_shingles
 from ..functions.vectors import cosine, topk_cosine_join
 
@@ -223,12 +223,11 @@ def minhash_lsh_dedup(
         oversized = None
         banded_joinable = banded
     other = banded_joinable.select(F.col("band_key"), F.col("doc_id").alias("doc_b"))
-    out = (
+    out = checkpoint(
         banded_joinable.join(other, "band_key")
         .where(F.col("doc_id") < F.col("doc_b"))
         .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     banded.unpersist()
     if oversized is not None:
@@ -281,7 +280,7 @@ def simhash_dedup(
     # released after the (scalar-pair) result is checkpointed
     chunked = fp.select("doc_id", "fp", F.explode(chunks).alias("chunk_key")).persist()
     other = chunked.select("chunk_key", F.col("doc_id").alias("doc_b"), F.col("fp").alias("fp_b"))
-    out = (
+    out = checkpoint(
         chunked.join(other, "chunk_key")
         .where(F.col("doc_id") < F.col("doc_b"))
         .select(
@@ -291,7 +290,6 @@ def simhash_dedup(
         )
         .where(F.col("hamming") <= max_hamming)  # filter before the dedup shuffle
         .distinct()
-        .localCheckpoint(eager=True)
     )
     chunked.unpersist()
     return out
@@ -391,7 +389,7 @@ def ngram_jaccard_dedup(
         .join(sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")), "doc_b")
         .withColumn("n_common", F.size(F.array_intersect("sh_a", "sh_b")))
     )
-    out = (
+    out = checkpoint(
         verified.select(
             "doc_a",
             "doc_b",
@@ -400,7 +398,6 @@ def ngram_jaccard_dedup(
             ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        .localCheckpoint(eager=True)
     )
     prefix.unpersist()
     shingles.unpersist()
@@ -488,10 +485,9 @@ def ngram_containment_dedup(
             F.size(F.array_intersect("sh_a", "sh_b")) / F.col("n_a"),
         )
     )
-    out = (
+    out = checkpoint(
         verified.where(F.col("containment") >= threshold)
         .select("doc_a", "doc_b", F.round("containment", 6).alias("containment"))
-        .localCheckpoint(eager=True)
     )
     shingles.unpersist()
     return out
@@ -666,14 +662,13 @@ def cosine_signlsh_dedup(
     # scalar (id, id, sim) rows, never the dim-d vectors; a pair hit in
     # several bands recomputes one dim-d dot — cheaper than shuffling
     # the vectors.
-    out = (
+    out = checkpoint(
         banded.join(other, "band_key")
         .where(F.col("doc_id") < F.col("doc_b"))
         .withColumn("sim", F.round(dot / (norm("vector") * norm("vec_b")), 6))
         .where(F.col("sim") >= threshold)
         .select(F.col("doc_id").alias("doc_a"), "doc_b", "sim")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     banded.unpersist()
     return out
@@ -841,12 +836,11 @@ def semdedup(
     # consume it — without this the probe re-evaluates per consumer
     # (measured 2× ~10 s per extra evaluation at sf1 before the exact
     # Arrow probe kernel; still the single biggest subplan after it)
-    assigned = (
+    assigned = checkpoint(
         _probe_centroids(
             ix.select(F.col("id").alias("query_id"), F.col("vector").alias("qv")), centroids, 1
         )
         .select(F.col("centroid_id").alias("cluster_id"), F.col("query_id").alias("id"), "qv")
-        .localCheckpoint(eager=True)
     )
 
     def _expr_rounded(src):
@@ -937,7 +931,7 @@ def semdedup(
     else:
         raise ValueError(f"impl must be matmul|expr, got {impl!r}")
 
-    out = (
+    out = checkpoint(
         rounded.select(
             F.col("id").alias(id_col),
             "cluster_id",
@@ -950,9 +944,8 @@ def semdedup(
         # scalar-row result materializes, then the assignment cache
         # frees — the module's cache contract (nothing persists past
         # return)
-        .localCheckpoint(eager=True)
     )
-    _free(assigned)
+    release(assigned)
     return out
 
 
@@ -1063,7 +1056,7 @@ def edit_distance_dedup(
             .select("doc_a", "doc_b")
             .distinct()
         )
-        out = (
+        out = checkpoint(
             cand.join(
                 base.select(F.col("id").alias("doc_a"), F.col("s").alias("s_a"), F.col("ln").alias("ln_a")),
                 "doc_a",
@@ -1076,7 +1069,6 @@ def edit_distance_dedup(
             .withColumn("dist", F.levenshtein("s_a", "s_b"))
             .where(F.col("dist") <= max_dist)
             .select("doc_a", "doc_b", "dist")
-            .localCheckpoint(eager=True)
         )
         base.unpersist()
         return out
@@ -1128,7 +1120,7 @@ def edit_distance_dedup(
         )
     )
     all_cand = cand.unionByName(short_cand).distinct()
-    out = (
+    out = checkpoint(
         all_cand.join(
             base.select(F.col("id").alias("doc_a"), F.col("s").alias("s_a"), F.col("ln").alias("ln_a")),
             "doc_a",
@@ -1141,7 +1133,6 @@ def edit_distance_dedup(
         .withColumn("dist", F.levenshtein("s_a", "s_b"))
         .where(F.col("dist") <= max_dist)
         .select("doc_a", "doc_b", "dist")
-        .localCheckpoint(eager=True)
     )
     pre.unpersist()
     base.unpersist()

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from ..ckpt import checkpoint, hash_partitioned, layout_cache, release
 
 __all__ = [
     "pagerank",
@@ -69,6 +69,25 @@ ITER_PARTITIONED_EDGE_MIN = 2_000_000
 #: single-shuffle window wins (measured 4.5 s → 1.6 s at sf0.1).
 OUTDEG_WINDOW_MAX_TASK_ROWS = 5_000_000
 _OUTDEG_PROBE_FRACTION = 0.01
+
+
+def _loop_edges(edges: DataFrame, *keys: str) -> tuple[DataFrame, ...]:
+    """The loop-invariant edge table, one frame per per-round join key.
+
+    At or below :data:`ITER_PARTITIONED_EDGE_MIN` rows (read at call
+    time) every key shares one checkpoint; above it each key gets its
+    own eagerly filled :func:`~klinker_spark.ckpt.layout_cache`, and
+    the checkpoint they were built from is freed.  The caller frees
+    the result with ``release(*frames)``."""
+    e0 = checkpoint(edges)
+    if e0.count() <= ITER_PARTITIONED_EDGE_MIN:
+        return (e0,) * len(keys)
+    out = []
+    for key in keys:
+        out.append(layout_cache(e0, key))
+        out[-1].count()
+    release(e0)
+    return tuple(out)
 
 
 def pagerank(
@@ -145,12 +164,7 @@ def pagerank(
     # window / groupBy reuse it — no extra exchange) survives inside
     # the cached InMemoryRelation, so each iteration's rank join
     # re-shuffles only the |V'|-row mass table, never the edges.
-    spark = edges.sparkSession
-    try:
-        part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        part = spark.sparkContext.defaultParallelism
-    e = e.repartition(part, "head")
+    e = hash_partitioned(e, "head")
     if shape == "join":
         deg = e.groupBy("head").agg(F.count("*").alias("outdeg"))
         # LEFT join, not inner: an inner equi-join silently drops
@@ -189,14 +203,7 @@ def pagerank(
         # empty graph: the |V| literal would constant-fold into an
         # ANSI divide-by-zero at PLANNING time (unlike the old
         # column-based division, which no row ever evaluated)
-        try:
-            nodes.unpersist()
-        except Exception:
-            pass
-        try:
-            edges_w.unpersist()
-        except Exception:
-            pass
+        release(nodes, edges_w)
         return nodes.select(
             "node",
             F.lit(None).cast("bigint").alias("rank_micro"),
@@ -263,7 +270,6 @@ def pagerank(
 
     summed = None
     for it in range(iters):
-        prev = summed
         if summed is None:
             # round 0 needs no join at all: r₀ is a pure expression of
             # head membership
@@ -300,20 +306,15 @@ def pagerank(
         # Broadcast path: the mass table is collected to the driver
         # each round anyway, so partitioning buys nothing — keep the
         # r11 checkpoint shape (measured equal; no churn at toy scale).
+        # The superseded round's storage frees NOW: at most two mass
+        # versions ever hold storage, and nothing leaks into the
+        # session once the final ranks materialize.
         if broadcast_ranks:
-            summed = _spread(spread_in).localCheckpoint(eager=True)
+            summed = checkpoint(_spread(spread_in), replacing=summed)
         else:
-            summed = _spread(spread_in).persist()
+            prev, summed = summed, _spread(spread_in).persist()
             summed.count()  # eager, like the checkpoint it replaces
-        # superseded round's blocks free NOW: at most two mass versions
-        # ever hold storage, and nothing leaks into the session once
-        # the final ranks materialize
-        if prev is not None:
-            _free(prev)
-            try:
-                prev.unpersist()
-            except Exception:
-                pass
+            release(prev)
     tele_n, init_n = _tele_init_for("node")
     if summed is None:  # iters == 0: the init vector is the answer
         ranks = nodes.select("node", init_n.alias("rank_micro"))
@@ -338,21 +339,8 @@ def pagerank(
                 ).cast("bigint")
             ).alias("rank_micro"),
         )
-    ranks = ranks.localCheckpoint(eager=True)
-    if summed is not None:
-        _free(summed)  # broadcast path: checkpoint blocks
-        try:
-            summed.unpersist()  # shuffle path: cached blocks
-        except Exception:
-            pass
-    try:
-        edges_w.unpersist()  # cached, not checkpointed — plain unpersist
-    except Exception:
-        pass
-    try:
-        nodes.unpersist()  # cached, not checkpointed (r13)
-    except Exception:
-        pass
+    ranks = checkpoint(ranks)
+    release(summed, edges_w, nodes)
     return ranks.select(
         "node", "rank_micro", F.round(F.col("rank_micro") / 1e6, 6).alias("rank")
     )
@@ -429,7 +417,7 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
-    out = (
+    out = checkpoint(
         deg.join(per_node, "node", "left")
         .select(
             "node",
@@ -445,10 +433,8 @@ def triangle_count(edges: DataFrame, a_col: str = "a", b_col: str = "b") -> Data
             )
             .alias("clustering_ppm"),
         )
-        .localCheckpoint(eager=True)
     )
-    e.unpersist()
-    deg.unpersist()
+    release(e, deg)
     return out
 
 
@@ -543,7 +529,7 @@ def neighbor_jaccard_join(
     w = Window.partitionBy("lid").orderBy(
         F.col("jaccard_ppm").desc(), F.col("rid").cast("string")
     )
-    out = (
+    out = checkpoint(
         scored.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= k)
         .select(
@@ -552,10 +538,8 @@ def neighbor_jaccard_join(
             "jaccard_ppm",
             F.col("rk").cast("int").alias("rk"),
         )
-        .localCheckpoint(eager=True)
     )
-    for cached in {base_l, base_r, l, r}:
-        cached.unpersist()
+    release(base_l, base_r, l, r)
     return out
 
 
@@ -587,47 +571,26 @@ def label_propagation(
         .select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
         .distinct()
     )
-    # loop-invariant adjacency: checkpointed at toy scale; above the
-    # size gate a cached copy PRE-PARTITIONED on the join key (r12, the
-    # pagerank lesson — localCheckpoint erases outputPartitioning in
-    # Spark 4, which re-shuffled |adj| on nbr every round at SMJ scale;
-    # below the gate the label table broadcasts and the checkpoint's
-    # truncated lineage wins — see ITER_PARTITIONED_EDGE_MIN's A/B)
-    adj0 = (
+    # loop-invariant adjacency, laid out for the per-round join on nbr
+    (adj,) = _loop_edges(
         e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
-        .unionAll(e.select(F.col("v"), F.col("u")))
-        .localCheckpoint(eager=True)
+        .unionAll(e.select(F.col("v"), F.col("u"))),
+        "nbr",
     )
-    adj = adj0
-    if adj0.count() > ITER_PARTITIONED_EDGE_MIN:
-        spark = edges.sparkSession
-        try:
-            part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            part = spark.sparkContext.defaultParallelism
-        adj = adj0.repartition(part, "nbr").persist()
-        adj.count()
     labels = adj.select("node").distinct().withColumn("lab", F.col("node"))
     w = Window.partitionBy("node").orderBy(F.col("c").desc(), "lab")
     for _ in range(iters):
         nbr_lab = labels.select(F.col("node").alias("nbr"), "lab")
-        prev = labels
-        labels = (
+        labels = checkpoint(
             adj.join(nbr_lab, "nbr")
             .groupBy("node", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
             .withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
-            .select("node", "lab")
-            .localCheckpoint(eager=True)
+            .select("node", "lab"),
+            replacing=labels,
         )
-        _free(prev)
-    if adj is not adj0:
-        try:
-            adj.unpersist()  # cached, not checkpointed — plain unpersist
-        except Exception:
-            pass
-    _free(adj0)
+    release(adj)
     return labels.select("node", F.col("lab").alias("community"))
 
 
@@ -666,12 +629,11 @@ def k_core(
             F.col(b_col).cast("string").alias(b_col),
             *[c for c in edges.columns if c not in (a_col, b_col)],
         )
-    e = (
+    e = checkpoint(
         edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
         .where(F.col("x") != F.col("y"))
         .select(F.least("x", "y").alias("u"), F.greatest("x", "y").alias("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         deg = (
@@ -681,14 +643,12 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.where(F.col("deg") >= k).select("node")
-        prev = e
-        e = (
+        e = checkpoint(
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+            .select("u", "v"),
+            replacing=e,
         )
-        _free(prev)
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select("v"))
@@ -727,51 +687,30 @@ def bfs_distances(
         .distinct()
     )
     e = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    # loop-invariant edges: checkpointed at toy scale; above the size
-    # gate a cached copy pre-partitioned on the per-level join key
-    # (r12, the pagerank lesson) — each frontier expansion then joins
-    # the cached layout exchange-free instead of re-shuffling |E| per
-    # level, while below the gate the frontier broadcasts and the
-    # checkpoint's truncated lineage wins (ITER_PARTITIONED_EDGE_MIN)
-    e0 = e.localCheckpoint(eager=True)
-    e = e0
-    if e0.count() > ITER_PARTITIONED_EDGE_MIN:
-        try:
-            part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            part = spark.sparkContext.defaultParallelism
-        e = e0.repartition(part, "u").persist()
-        e.count()
+    # loop-invariant edges, laid out for the per-level join on u
+    (e,) = _loop_edges(e, "u")
     node_type = e.schema["u"].dataType.simpleString()
-    dist = spark.createDataFrame(
-        [(s, 0) for s in sources], f"node {node_type}, dist INT"
-    ).localCheckpoint(eager=True)
+    dist = checkpoint(
+        spark.createDataFrame([(s, 0) for s in sources], f"node {node_type}, dist INT")
+    )
+    # the settled set and the last level's frontier rotate separately;
+    # in round 1 the frontier IS the settled set, which must survive
     frontier = dist
     for d in range(1, max_depth + 1):
-        nxt = (
+        frontier = checkpoint(
             frontier.join(e, frontier["node"] == e["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .withColumn("dist", F.lit(d))
-            .localCheckpoint(eager=True)
+            .withColumn("dist", F.lit(d)),
+            replacing=None if frontier is dist else frontier,
         )
-        if nxt.isEmpty():
-            _free(nxt)
+        if frontier.isEmpty():
             break
-        new_dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        # the consumed frontier (last level's nxt) and the superseded
-        # settled set free now; in round 1 they are the same frame
-        if frontier is not dist:
-            _free(frontier)
-        _free(dist)
-        dist, frontier = new_dist, nxt
-    if e is not e0:
-        try:
-            e.unpersist()  # cached, not checkpointed — plain unpersist
-        except Exception:
-            pass
-    _free(e0)
+        dist = checkpoint(dist.unionAll(frontier), replacing=dist)
+    if frontier is not dist:
+        release(frontier)
+    release(e)
     return dist
 
 
@@ -804,36 +743,14 @@ def hits(
     if iters < 1:
         raise ValueError(f"hits() needs iters >= 1, got {iters}")
     # loop-invariant edges, joined on BOTH endpoints each iteration
-    # (hub update on p, authority update on c).  Above the size gate:
-    # TWO persisted copies, each pre-partitioned on its join key (r12,
-    # the pagerank lesson — a checkpointed edge table re-shuffled |E|
-    # twice per iteration under SortMergeJoin; two slim cached layouts
-    # join exchange-free, the GraphX both-directions trade), which
-    # saves 2·iters |E| shuffles for 2 builds.  Below the gate the
-    # score tables broadcast anyway (the edge side streams map-side,
-    # exchange-free already), so the r11 localCheckpoint shape is kept:
-    # lineage truncated, per-round plans stay tiny (see the gate
-    # constant's A/B — a plain cached copy was measured strictly worse
-    # than the checkpoint at toy scale).
-    e0 = (
-        edges.select(F.col(a_col).alias("c"), F.col(b_col).alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    # (hub update on p, authority update on c): above the size gate one
+    # cached layout per key, the GraphX both-directions trade — 2 builds
+    # save 2·iters |E| shuffles under SortMergeJoin
+    e_by_p, e_by_c = _loop_edges(
+        edges.select(F.col(a_col).alias("c"), F.col(b_col).alias("p")).distinct(),
+        "p",
+        "c",
     )
-    n_edges = e0.count()
-    if n_edges > ITER_PARTITIONED_EDGE_MIN:
-        spark = edges.sparkSession
-        try:
-            part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            part = spark.sparkContext.defaultParallelism
-        e_by_p = e0.repartition(part, "p").persist()
-        e_by_p.count()
-        e_by_c = e0.repartition(part, "c").persist()
-        e_by_c.count()
-        _free(e0)
-    else:
-        e_by_p = e_by_c = e0
     a = (
         e_by_p.select("p")
         .distinct()
@@ -843,30 +760,19 @@ def hits(
     for _ in range(iters):
         h = e_by_p.join(a, "p").groupBy("c").agg(F.sum("score").alias("s"))
         tot_h = h.agg(F.sum("s").alias("tot"))
-        prev_h = hn
-        hn = (
+        hn = checkpoint(
             h.crossJoin(F.broadcast(tot_h))
-            .select("c", F.expr("(2000000 * s + tot) div (2 * tot)").alias("score"))
-            .localCheckpoint(eager=True)
+            .select("c", F.expr("(2000000 * s + tot) div (2 * tot)").alias("score")),
+            replacing=hn,
         )
-        _free(prev_h)
         a2 = e_by_c.join(hn, "c").groupBy("p").agg(F.sum("score").alias("s"))
         tot_a = a2.agg(F.sum("s").alias("tot"))
-        prev_a = a
-        a = (
+        a = checkpoint(
             a2.crossJoin(F.broadcast(tot_a))
-            .select("p", F.expr("(2000000 * s + tot) div (2 * tot)").alias("score"))
-            .localCheckpoint(eager=True)
+            .select("p", F.expr("(2000000 * s + tot) div (2 * tot)").alias("score")),
+            replacing=a,
         )
-        _free(prev_a)
-    if e_by_p is e0:
-        _free(e0)
-    else:
-        for cached in (e_by_p, e_by_c):
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
+    release(e_by_p, e_by_c)
     return hn.select(
         F.col("c").alias("node"), F.lit("hub").alias("kind"), F.col("score").alias("score_ppm")
     ).unionAll(

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import checkpoint
 from ..functions.text import tokenize
 
 __all__ = [
@@ -102,14 +103,13 @@ def train_quality_scores(
         labelCol="label",
     )
     model = lr.fit(feat)
-    out = (
+    out = checkpoint(
         model.transform(feat)
         .select(
             "doc_id",
             F.col("label").cast("int").alias("label"),
             F.round(vector_to_array("probability")[1], 6).alias("prob"),
         )
-        .localCheckpoint(eager=True)
     )
     feat.unpersist()
     return out
@@ -202,10 +202,12 @@ def train_quality_scores_deterministic(
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    out = fx.select(
-        "doc_id",
-        F.col("y").cast("int").alias("label"),
-        F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-dot)), 6).alias("prob"),
-    ).localCheckpoint(eager=True)
+    out = checkpoint(
+        fx.select(
+            "doc_id",
+            F.col("y").cast("int").alias("label"),
+            F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-dot)), 6).alias("prob"),
+        )
+    )
     fx.unpersist()
     return out

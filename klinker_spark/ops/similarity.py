@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..ckpt import release as _free
+from ..ckpt import checkpoint, release
 from ..functions.vectors import cosine, dot, l2_norm, topk_cosine_join
 
 __all__ = [
@@ -1018,17 +1018,16 @@ def kcenter_sample(
         raise ValueError("kcenter_sample: empty input — no seed point to start FPS from")
     seed = seeds[0]
     rows = [(0, seed["id"], None)]
-    state = pts.withColumn("mind", d2_to(seed["v"])).localCheckpoint(eager=True)
+    state = checkpoint(pts.withColumn("mind", d2_to(seed["v"])))
     for r in range(1, k):
         nxt = state.orderBy(F.col("mind").desc(), "id").limit(1).collect()[0]
         rows.append((r, nxt["id"], int(nxt["mind"])))
         if r < k - 1:
-            prev = state
-            state = state.withColumn(
-                "mind", F.least("mind", d2_to(nxt["v"]))
-            ).localCheckpoint(eager=True)
-            _free(prev)
-    _free(state)
+            state = checkpoint(
+                state.withColumn("mind", F.least("mind", d2_to(nxt["v"]))),
+                replacing=state,
+            )
+    release(state)
     spark = emb.sparkSession
     return spark.createDataFrame(
         rows, f"sel_round int, vec_id {id_type}, mind_micro bigint"

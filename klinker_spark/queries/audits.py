@@ -1,5 +1,6 @@
 """Query registrations: audits family (split from the original single-file registry; registration order preserved by package import order in __init__)."""
 from __future__ import annotations
+from ..ckpt import checkpoint
 from ._core import F, ORACLES, Window, _shingle_cte, _t, minhash_lsh_dedup, quality_score, register, tokenize
 
 # ------------------------------------------------------------------ OLAP: grouping sets / cube
@@ -429,7 +430,7 @@ def lsh_precision_recall_audit_q(spark, sf_dir):
         f"CAST(CASE WHEN {den} = 0 THEN 1000000"
         f" ELSE {num} * 1000000 DIV {den} END AS BIGINT)"
     )
-    out = (
+    out = checkpoint(
         prec.crossJoin(F.broadcast(sdocs))
         .crossJoin(F.broadcast(rec))
         .select(
@@ -443,7 +444,6 @@ def lsh_precision_recall_audit_q(spark, sf_dir):
             "n_caught",
             ppm("n_caught", "n_sample_true").alias("recall_ppm"),
         )
-        .localCheckpoint(eager=True)
     )
     sh_all.unpersist()
     return out

@@ -1,5 +1,6 @@
 """Query registrations: linkage family (split from the original single-file registry; registration order preserved by package import order in __init__)."""
 from __future__ import annotations
+from ..ckpt import checkpoint
 from ._core import F, Window, _STOP_SQL, _t, ann_topk_ivf, brute_force_topk, qgrams, quality_score, register
 from .ann import _COS_SQL, _IVF_MD5_ORACLE, _KNN_ORACLE, _index_current, _write_index_manifest
 from .events import _NODE_TAG_SHIFT, _tag_node
@@ -261,7 +262,7 @@ def customer_rfm_segments_q(spark, sf_dir):
     # ntile passes would otherwise re-run the fact aggregate), count it
     # once, and feed the count to all three passes as a literal — the
     # plan stays linear: three range exchanges, no broadcast subtrees
-    rfm = rfm.localCheckpoint(eager=True)
+    rfm = checkpoint(rfm)
     n_cust = rfm.count()
     binned = ntile_global(
         rfm, [F.col("recency_days").asc(), F.col("o_custkey")], 4, "r_bin", n_cust
@@ -941,7 +942,7 @@ def ivf_append_audit_q(spark, sf_dir):
         )
         ivf_index_append(emb.where(F.col("vec_id") % 5 == 0), path)
         lists = spark.read.parquet(f"{path}/lists")
-        return (
+        return checkpoint(
             lists.groupBy(F.col("centroid_id").cast("int").alias("centroid_id"))
             .agg(
                 F.sum(F.when(F.col("id") % 5 != 0, 1).otherwise(0))
@@ -952,7 +953,6 @@ def ivf_append_audit_q(spark, sf_dir):
                 .alias("n_appended"),
             )
             .orderBy("centroid_id")
-            .localCheckpoint(eager=True)
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)

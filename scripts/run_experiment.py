@@ -39,7 +39,7 @@ def build_blocker(name: str):
     return {
         "standard": lambda: StandardBlocker("name"),
         "token": TokenBlocker,
-        "qgram": QgramsBlocker,
+        "qgram": lambda: QgramsBlocker("name"),
         "unique": UniqueNameBlocker,
         "tfidf": TfIdfFilteredTokenBlocker,
         "lsh": MinHashLSHBlocker,

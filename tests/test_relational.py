@@ -175,3 +175,58 @@ def test_hybrid_composite_lightea(frame_a, frame_b, rels_a, rels_b):
     uniq = {(r["left_id"], r["right_id"])
             for r in UniqueNameBlocker().assign(frame_a, frame_b).pairs().collect()}
     assert uniq <= pairs
+
+
+def _skewed_kg(spark):
+    """Relation-side blocks shaped like ``test_purge_keeps_small_blocks``:
+    20 one-to-one twin tokens, 10 one-to-two ones, and one token
+    ("hubtoken") every entity reaches through a neighbor — the purge
+    threshold lands at 2 comparisons, so the hub block must go."""
+    from klinker_spark.data.frames import EntityFrame
+
+    left = [(f"l{i}", f"key{i:02d}x") for i in range(30)]
+    left += [(f"t{i}", f"twin{i:02d}x") for i in range(30)] + [("lhub", "hubtoken")]
+    right = [(f"r{i}", f"key{i:02d}x") for i in range(30)]
+    right += [(f"s{i}", f"key{i:02d}x") for i in range(20, 30)]
+    right += [(f"u{i}", f"twin{i:02d}x") for i in range(30)] + [("rhub", "hubtoken")]
+    lrel = [(f"l{i}", n) for i in range(30) for n in ("lhub", f"t{i}")]
+    rrel = [(f"r{i}", n) for i in range(30) for n in ("rhub", f"u{i}")]
+    rrel += [(f"s{i}", n) for i in range(20, 30) for n in ("rhub", f"u{i}")]
+
+    def frame(rows, name):
+        return EntityFrame.from_wide(spark.createDataFrame(rows, "id string, name string"), name=name)
+
+    def rels(rows):
+        return spark.createDataFrame(
+            [(h, "near", t) for h, t in rows], "head string, rel string, tail string"
+        )
+
+    return frame(left, "L"), frame(right, "R"), rels(lrel), rels(rrel)
+
+
+def test_relational_blockers_honor_inner_purge(spark):
+    """An inner blocker's ``purge=True`` applies to the blocks the
+    relational blockers build from neighbor text, exactly as an
+    explicit ``purge()`` of the unpurged result would."""
+    from klinker_spark.blockers.relation_aware import (
+        RelationalBlocker,
+        SimpleRelationalBlocker,
+    )
+    from klinker_spark.blockers.token import TokenBlocker
+
+    lf, rf, lrel, rrel = _skewed_kg(spark)
+    plain = SimpleRelationalBlocker(TokenBlocker()).assign(lf, rf, lrel, rrel)
+    expected = blocks_as_dict(plain.purge(cc_round=0))
+    assert "hubtoken" in blocks_as_dict(plain)
+    assert "hubtoken" not in expected
+    got = SimpleRelationalBlocker(TokenBlocker(purge=True, cc_round=0)).assign(
+        lf, rf, lrel, rrel
+    )
+    assert blocks_as_dict(got) == expected
+
+    rel = RelationalBlocker(TokenBlocker(), TokenBlocker(purge=True, cc_round=0)).assign(
+        lf, rf, lrel, rrel
+    )
+    # the relation side's oversized hub block (neighbor text) is purged;
+    # only the attribute side's own-name block survives the combine
+    assert blocks_as_dict(rel)["hubtoken"] == ({"lhub"}, {"rhub"})
